@@ -266,13 +266,12 @@ def hybrid_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         _rrf_head,
     )
     from se_data_pipeline_spark.sources.layout import (
+        _overlap_writes,
         bm25_from_postings,
         ivf_candidates,
         write_ivf_index,
         write_posting_lists,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -281,9 +280,9 @@ def hybrid_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_store = _scratch("hybrid_postings")
 
     # the two store builds are fully independent (distinct scratch
-    # dirs, distinct inputs) — submit them from two driver threads so
-    # the second build's jobs back-fill the first's stragglers
-    # (guide §2.6 overlap; Spark schedules concurrent jobs FIFO)
+    # dirs, distinct inputs) — overlap them so the second build's
+    # jobs back-fill the first's stragglers (guide §2.6; Spark
+    # schedules concurrent jobs FIFO)
     def _build_dense():
         head = emb.orderBy("vec_id").limit(1).collect()
         if not head:  # empty-corpus sweep: no dense leg
@@ -292,10 +291,9 @@ def hybrid_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_ivf_index(emb, v_store, cell_col="label")
         return head, v_store
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_dense = pool.submit(_build_dense)
-        write_posting_lists(docs, p_store)
-        built = f_dense.result()
+    built, _ = _overlap_writes(
+        _build_dense, lambda: write_posting_lists(docs, p_store)
+    )
 
     sparse = bm25_from_postings(
         spark, p_store, SEARCH_TERMS, limit=_HYBRID_K
@@ -1017,6 +1015,7 @@ def hybrid_served_recall(
         _rrf_head,
     )
     from se_data_pipeline_spark.sources.layout import (
+        _overlap_writes,
         bm25_from_postings,
         ivf_candidates,
         ivf_serve_state,
@@ -1024,16 +1023,14 @@ def hybrid_served_recall(
         write_posting_lists,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     emb = load_table(spark, sf_dir, "embeddings")
     p_store = _scratch("hybrid_recall_postings")
 
-    # independent store builds overlapped from two driver threads
-    # (guide §2.6) — the hybrid_served pattern
+    # independent store builds overlapped (guide §2.6) — the
+    # hybrid_served pattern
     def _build_dense():
         head = emb.orderBy("vec_id").limit(1).collect()
         if head:
@@ -1042,10 +1039,9 @@ def hybrid_served_recall(
             return head, store
         return None
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_dense = pool.submit(_build_dense)
-        write_posting_lists(docs, p_store)
-        built = f_dense.result()
+    built, _ = _overlap_writes(
+        _build_dense, lambda: write_posting_lists(docs, p_store)
+    )
     head = built[0] if built else []
     sparse = bm25_from_postings(
         spark, p_store, SEARCH_TERMS, limit=_HYBRID_K
@@ -2236,13 +2232,12 @@ def bm25_phrase_boost_served(
     a broadcast {pool}-row pool; the boost math is row-local."""
     from se_data_pipeline_spark.functions.text import SEARCH_TERMS
     from se_data_pipeline_spark.sources.layout import (
+        _overlap_writes,
         bm25_from_postings,
         phrase_from_postings,
         write_positional_postings,
         write_posting_lists,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -2250,11 +2245,11 @@ def bm25_phrase_boost_served(
     f_store = _scratch("boost_freq")
     p_store = _scratch("boost_pos")
     # the two store builds are independent (distinct dirs) —
-    # overlapped from two driver threads, the hybrid_served pattern
-    with ThreadPoolExecutor(max_workers=2) as pool_:
-        f_pos = pool_.submit(write_positional_postings, docs, p_store)
-        write_posting_lists(docs, f_store)
-        f_pos.result()
+    # overlapped, the hybrid_served pattern
+    _overlap_writes(
+        lambda: write_positional_postings(docs, p_store),
+        lambda: write_posting_lists(docs, f_store),
+    )
     pool = bm25_from_postings(
         spark, f_store, SEARCH_TERMS, limit=_BOOST_POOL
     )

@@ -14,6 +14,7 @@ on every downstream join.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -320,50 +321,73 @@ def _dyn_overwrite(df: DataFrame, cols: list, path: str) -> None:
     )
 
 
-def _overlap_writes(*thunks) -> None:
-    """Run independent NON-COMMIT store writes from driver threads so
-    concurrent jobs back-fill each other's stragglers and the driver
-    round-trips overlap (guide §2.6; the write_ivf_index precedent).
+def _overlap_writes(*thunks) -> list:
+    """Run independent thunks (NON-COMMIT store writes, independent
+    store builds) from driver threads so concurrent jobs back-fill
+    each other's stragglers and the driver round-trips overlap
+    (guide §2.6), and return their results in argument order.
     Callers must keep the commit-point write (ledger/totals) OUT of
-    the pool and issue it only after this returns — crash semantics
-    are then unchanged: any subset of these writes may exist without
-    the commit row, exactly as under the sequential order, and the
-    re-run's overwrite replaces them. SPARK_GRAFT_NO_OVERLAP=1 falls
-    back to sequential execution (the same-JVM A/B instrument — no
-    caching, no behavior change beyond scheduling)."""
+    the thunks and issue it only after this returns — crash
+    semantics are then unchanged: any subset of these writes may
+    exist without the commit row, exactly as under the sequential
+    order, and the re-run's overwrite replaces them.
+
+    The threads are pyspark.InheritableThread: every job a thunk
+    issues runs under the CALLER's job group, description and
+    scheduler pool, so a streaming query's stop() / cancelJobGroup
+    reaches overlapped writes and per-group job accounting counts
+    them (plain threads start with empty local properties under
+    pinned-thread mode). SPARK_GRAFT_NO_OVERLAP=1 falls back to
+    sequential execution (the same-JVM A/B instrument — no caching,
+    no behavior change beyond scheduling)."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
-        for t in thunks:
-            t()
-        return
-    from concurrent.futures import ThreadPoolExecutor
+    if len(thunks) < 2 or os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
+        return [t() for t in thunks]
+    from pyspark import InheritableThread
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        for f in futures:
-            f.result()
+    results: list = [None] * len(thunks)
+    errors: list = []
+
+    def _run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors.append(e)
+
+    threads = [
+        InheritableThread(target=lambda i=i: _run(i))
+        for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
+
+
+def _ledger_frame(spark: SparkSession, batch_id: int, n_docs: int = 0):
+    """One commit-ledger row as a JVM-literal frame (the
+    claim_offline_batch 1-row rule)."""
+    from pyspark.sql import functions as F
+
+    return spark.range(1).select(
+        F.lit(int(n_docs)).cast("long").alias("n_docs"),
+        F.lit(int(batch_id)).cast("int").alias("batch_id"),
+    )
 
 
 def _ledger_row(
     spark: SparkSession, path: str, batch_id: int, n_docs: int = 0
 ) -> None:
     """One commit-ledger row (written LAST by every writer — the
-    commit point). JVM-literal frame per the claim_offline_batch
-    1-row rule."""
-    from pyspark.sql import functions as F
-
-    (
-        spark.range(1)
-        .select(
-            F.lit(int(n_docs)).cast("long").alias("n_docs"),
-            F.lit(int(batch_id)).cast("int").alias("batch_id"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    commit point)."""
+    _dyn_overwrite(
+        _ledger_frame(spark, batch_id, n_docs).coalesce(1),
+        ["batch_id"],
+        path,
     )
 
 
@@ -457,6 +481,276 @@ def _kill_tombstoned(
         )
         .drop("tomb_b")
     )
+
+
+# --------------------------------------------------------------------
+# One delta-store protocol. The frequency, positional, shingle and
+# MinHash stores are the same machine over different frames: a
+# ``postings`` rows table partitioned by batch_id (+ tok_bucket),
+# doc_id tombstones, an offline fence, and ONE commit table written
+# LAST per batch. A _DeltaStore spec names what differs; the generic
+# functions below are the protocol, written once:
+#
+#   revise/delete: recover swap -> committed hw -> refuse unclaimed
+#     partials -> claim fence -> rows || tombstones -> commit row
+#   stream batch:  fence guard -> rows || tombstones -> commit row
+#   live/compact:  committed (batch_id < hw) tombstone-live rows,
+#     folded to batch_id=-1 by one whole-dir swap
+#
+# Readers derive the committed high-water mark from the commit table,
+# so any subset of a batch's writes without its commit row serves
+# nothing, and the re-run (same id, dynamic overwrite) replaces it.
+# A store with no commit table has no committed batch and is refused.
+
+
+@dataclass(frozen=True)
+class _DeltaStore:
+    """What one delta store is: its name (error messages), rows read
+    schema and partition columns, the delta-frame builder
+    ``(docs, batch_id, n_buckets) -> {subdir: frame}`` over the
+    ``deltas`` subdirs (``postings`` partitioned by ``parts``, any
+    other by batch_id), the
+    commit table and its schema, the commit-row builder
+    ``(spark, out_dir, docs | None, ids | None, batch_id) -> 1-row
+    frame`` (docs None: a delete; ids None: no revisions), and
+    whether it is tok-bucketed (then it has a meta table)."""
+
+    what: str
+    schema: str
+    parts: tuple
+    frames: Callable
+    commit: str
+    commit_schema: str
+    commit_row: Callable
+    bucketed: bool = False
+    deltas: tuple = ("postings",)
+
+
+def _frame_parts(spec: _DeltaStore, sub: str) -> tuple:
+    return spec.parts if sub == "postings" else ("batch_id",)
+
+
+def _require_commit(
+    spark: SparkSession, out_dir: str, spec: _DeltaStore
+) -> None:
+    """Refuse a store with no commit table: no batch of it ever
+    committed (a build or first stream batch died before its commit
+    row), so whatever rows exist are uncommitted partials."""
+    fs, p = _hadoop_path(spark, f"{out_dir}/{spec.commit}")
+    if not fs.exists(p):
+        raise ValueError(
+            f"{spec.what} at {out_dir} has no {spec.commit} commit "
+            "table — no batch was ever committed (a build or the "
+            "first stream micro-batch crashed before its commit row). "
+            "Remedy: restart the maintenance stream from its "
+            "checkpoint, or rebuild the store."
+        )
+
+
+def _committed_hw(
+    spark: SparkSession, out_dir: str, spec: _DeltaStore
+) -> int:
+    """One past the newest COMMITTED batch — the max over the commit
+    table, every writer's LAST write. Partial partitions at the
+    uncommitted id are excluded from reads (before_batch) and
+    overwritten when the operation re-runs with the same id."""
+    from pyspark.sql import functions as F
+
+    _require_commit(spark, out_dir, spec)
+    mx = (
+        spark.read.schema(spec.commit_schema)
+        .parquet(f"{out_dir}/{spec.commit}")
+        .agg(F.max("batch_id").alias("b"))
+        .collect()[0]["b"]
+    )
+    return max(0, (mx if mx is not None else -1) + 1)
+
+
+def _commit(
+    spec: _DeltaStore, spark, out_dir: str, docs, ids, batch_id: int
+) -> None:
+    """The batch's commit row — always the LAST write of a batch."""
+    _dyn_overwrite(
+        spec.commit_row(spark, out_dir, docs, ids, batch_id).coalesce(1),
+        ["batch_id"],
+        f"{out_dir}/{spec.commit}",
+    )
+
+
+def _store_write(
+    spec: _DeltaStore, docs: DataFrame, out_dir: str, n_buckets=None
+) -> None:
+    """Batch build: every delta frame at ``batch_id=-1`` (and the meta
+    table) written concurrently, then the commit row."""
+    spark = docs.sparkSession
+
+    def _put(df: DataFrame, cols, path: str) -> None:
+        df.write.mode("overwrite").partitionBy(*cols).parquet(path)
+
+    writes = [
+        lambda sub=sub, df=df: _put(
+            df, _frame_parts(spec, sub), f"{out_dir}/{sub}"
+        )
+        for sub, df in spec.frames(docs, -1, n_buckets).items()
+    ]
+    if spec.bucketed:
+        writes.append(lambda: _write_postings_meta(spark, out_dir, n_buckets))
+    _overlap_writes(*writes)
+    _put(
+        spec.commit_row(spark, out_dir, docs, None, -1).coalesce(1),
+        ["batch_id"],
+        f"{out_dir}/{spec.commit}",
+    )
+
+
+def _apply_batch(
+    spec: _DeltaStore,
+    spark: SparkSession,
+    out_dir: str,
+    docs: DataFrame,
+    batch_id: int,
+    n_buckets,
+    revisions: bool,
+) -> None:
+    """Write one delta batch: the frames, a tombstone per doc_id when
+    ``revisions`` (killing the doc's rows from older batches; its
+    replacement rows, written AT batch_id, survive) and the meta
+    table if the store has none yet — concurrently — then the commit
+    row LAST. Dynamic partition overwrite makes a re-run (offline
+    retry, stream replay) replace exactly its own partitions."""
+    ids = docs.select("doc_id").distinct() if revisions else None
+    writes = [
+        lambda sub=sub, df=df: _dyn_overwrite(
+            df, _frame_parts(spec, sub), f"{out_dir}/{sub}"
+        )
+        for sub, df in spec.frames(docs, batch_id, n_buckets).items()
+    ]
+    if ids is not None:
+        writes.append(
+            lambda: _tombstone_write(
+                ids, "doc_id", batch_id, f"{out_dir}/tombstones"
+            )
+        )
+    if spec.bucketed:
+        # meta is written ONCE, by the store-creating batch: the
+        # modulus never changes, and rewriting the 1-row table per
+        # batch opens a window where a concurrent serve finds no meta
+        # or hits listed-then-deleted files (ADVICE r10)
+        fs, meta = _hadoop_path(spark, f"{out_dir}/meta")
+        if not fs.exists(meta):
+            writes.append(
+                lambda: _write_postings_meta(spark, out_dir, n_buckets)
+            )
+    _overlap_writes(*writes)
+    _commit(spec, spark, out_dir, docs, ids, batch_id)
+
+
+def _offline_batch(spec: _DeltaStore, spark, out_dir: str, what: str) -> int:
+    """The offline revise/delete prologue: recover a crashed swap,
+    take the committed high-water mark as the batch id, refuse
+    unclaimed partials there, claim the id in the fence."""
+    recover_compacting(spark, out_dir)
+    next_b = _committed_hw(spark, out_dir, spec)
+    _offline_begin(
+        spark,
+        out_dir,
+        f"{what} at {out_dir}",
+        next_b,
+        [f"{out_dir}/{sub}" for sub in (*spec.deltas, "tombstones")],
+    )
+    return next_b
+
+
+def _store_revise(
+    spec: _DeltaStore, spark, docs: DataFrame, out_dir: str, what: str
+) -> int:
+    """UPSERT: every doc_id in `docs` (unique within the batch)
+    replaces its previous version; new ids are plain inserts. Returns
+    the batch id used. Run while any maintenance stream on the store
+    is stopped — the claimed id is fenced against its resumption."""
+    next_b = _offline_batch(spec, spark, out_dir, what)
+    nb = _postings_meta_buckets(spark, out_dir) if spec.bucketed else None
+    _apply_batch(spec, spark, out_dir, docs, next_b, nb, True)
+    return next_b
+
+
+def _store_delete(
+    spec: _DeltaStore, spark, doc_ids: DataFrame, out_dir: str, what: str
+) -> int:
+    """Tombstones for the ids (no replacement rows) + the commit row.
+    Ids absent from the store are no-ops. Returns the batch id."""
+    next_b = _offline_batch(spec, spark, out_dir, what)
+    ids = doc_ids.select("doc_id").distinct()
+    _tombstone_write(ids, "doc_id", next_b, f"{out_dir}/tombstones")
+    _commit(spec, spark, out_dir, None, ids, next_b)
+    return next_b
+
+
+def _store_live(spec: _DeltaStore, spark, out_dir: str) -> DataFrame:
+    """Committed, tombstone-live rows of a ledger store."""
+    from pyspark.sql import functions as F
+
+    recover_compacting(spark, out_dir)
+    hw = _committed_hw(spark, out_dir, spec)
+    rows = (
+        spark.read.schema(spec.schema)
+        .parquet(f"{out_dir}/postings")
+        .filter(F.col("batch_id") < hw)  # committed only
+    )
+    return _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
+
+
+def _store_compact(spec: _DeltaStore, spark, out_dir: str) -> None:
+    """Fold a ledger store's COMMITTED deltas into one ``batch_id=-1``
+    base with its tombstones (and fence) folded OUT, by one whole-dir
+    swap_compacted: tombstones and the rows they kill change together
+    atomically (swapping them separately leaves a crash window where
+    live tombstones kill the folded base). Serves are then back on
+    the no-tombstone fast path and a fresh-checkpoint stream restarts
+    at id 0. Run while the maintenance stream is stopped."""
+    from pyspark.sql import functions as F
+
+    rows = _store_live(spec, spark, out_dir)
+    nb = _postings_meta_buckets(spark, out_dir) if spec.bucketed else None
+
+    def _write(tmp: str) -> None:
+        folded = rows.withColumn("batch_id", F.lit(-1))
+        if spec.bucketed:  # one file per bucket dir
+            folded = folded.repartition(F.col("tok_bucket"))
+        folded.write.mode("overwrite").partitionBy(*spec.parts).parquet(
+            f"{tmp}/postings"
+        )
+        # informational live-doc count, read back from the folded rows
+        # just written (explicit schema: a zero-row fold writes no
+        # files) — not a second evaluation of the live view
+        (
+            spark.read.schema("doc_id bigint")
+            .parquet(f"{tmp}/postings")
+            .select("doc_id")
+            .distinct()
+            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+            .withColumn("batch_id", F.lit(-1))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(f"{tmp}/{spec.commit}")
+        )
+        if spec.bucketed:
+            _write_postings_meta(spark, tmp, nb)
+
+    swap_compacted(spark, out_dir, _write, spec.what)
+
+
+def _ledger_count(spark, out_dir, docs, ids, batch_id) -> DataFrame:
+    """Commit row of the ledger stores: the batch's document count
+    (informational; a delete adds none)."""
+    from pyspark.sql import functions as F
+
+    if docs is None:
+        return _ledger_frame(spark, batch_id)
+    return docs.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs")
+    ).withColumn("batch_id", F.lit(batch_id))
 
 
 def write_bucketed_table(
@@ -920,33 +1214,23 @@ def write_ivf_index(
     # The centroid table, the pq tables and the cells store are
     # INDEPENDENT paths with no ordering constraint between them —
     # only the batches ledger (the commit point) must come last.
-    # Submit the two heavy writes from driver threads so the second
-    # job's tasks back-fill the first's stragglers (guide §2.6, the
-    # hybrid-store precedent); the tiny pq write rides the main
-    # thread alongside them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_centroids() -> None:
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{out_path}/centroids"
-        )
-
-    def _write_cells() -> None:
-        (
-            rows.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("cell", "batch_id")
-            .parquet(f"{out_path}/cells")
-        )
-
+    # Overlap the writes (guide §2.6) so the second job's tasks
+    # back-fill the first's stragglers.
     spark = df.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cent = pool.submit(_write_centroids)
-        f_cells = pool.submit(_write_cells)
-        if cb is not None:
-            _write_pq_tables(spark, out_path, cb, pq_m, pq_sub)
-        f_cent.result()
-        f_cells.result()
+    writes = [
+        lambda: centroids.coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{out_path}/centroids"),
+        lambda: rows.withColumn("batch_id", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy("cell", "batch_id")
+        .parquet(f"{out_path}/cells"),
+    ]
+    if cb is not None:
+        writes.append(
+            lambda: _write_pq_tables(spark, out_path, cb, pq_m, pq_sub)
+        )
+    _overlap_writes(*writes)
     # batches commit ledger LAST (r11, harmonizing the IVF store with
     # the postings/positional/shingle stores): readers derive the
     # committed high-water mark from it, so a crashed revision's
@@ -955,26 +1239,22 @@ def write_ivf_index(
     # explicit schema for the empty-store case) instead of re-running
     # the whole scan/encode lineage a second time — same value, one
     # input pass saved (r13; the compact_ivf_index count precedent).
+    # Only the batch_id=-1 partition counts (pruned by partitioning):
+    # under a session-wide dynamic partitionOverwriteMode a rebuild
+    # leaves a stream-maintained store's batch_id>=0 partitions behind.
     fs_c, cells_p = _hadoop_path(spark, f"{out_path}/cells")
     n_docs = (
-        spark.read.schema("vec_id bigint")
+        spark.read.schema("vec_id bigint, batch_id int")
         .parquet(f"{out_path}/cells")
+        .filter(F.col("batch_id") == -1)
         .count()
         if fs_c.exists(cells_p)
         else 0  # zero-row build: the partitioned write of an empty
         # frame may not materialize the directory at all
     )
-    (
-        spark.range(1)
-        .select(
-            F.lit(int(n_docs)).cast("long").alias("n_docs"),
-            F.lit(-1).cast("int").alias("batch_id"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{out_path}/batches")
-    )
+    _ledger_frame(spark, -1, n_docs).coalesce(1).write.mode(
+        "overwrite"
+    ).partitionBy("batch_id").parquet(f"{out_path}/batches")
 
 
 _IVF_TOMBSTONES_SCHEMA = "vec_id bigint, batch_id int"
@@ -998,16 +1278,6 @@ def _ivf_committed_hw(
         .collect()[0]["b"]
     )
     return max(0, (mx if mx is not None else -1) + 1)
-
-
-def _ivf_tombstones(
-    spark: SparkSession, index_path: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """(vec_id, tomb_b) with tomb_b the vector's newest tombstone, or
-    None when the index has never seen a revision (the append-only
-    fast path). Same kill rule as the posting-list store: a
-    tombstone at batch B kills that id's rows from batches < B."""
-    return _tombstones_view(spark, index_path, "vec_id", before_batch)
 
 
 _UNREAD = object()  # "not supplied — read it" sentinel (None is a
@@ -1273,7 +1543,7 @@ def revise_ivf_vectors(
             .agg(F.max("batch_id").alias("b"))
             .collect()[0]["b"]
         )
-        tomb = _ivf_tombstones(spark, index_path)
+        tomb = _tombstones_view(spark, index_path, "vec_id")
         mx_tomb = (
             tomb.agg(F.max("tomb_b").alias("b")).collect()[0]["b"]
             if tomb is not None
@@ -2129,13 +2399,8 @@ def _require_postings_meta(spark: SparkSession, out_dir: str) -> None:
 
 
 def _serve_prologue(
-    spark: SparkSession,
-    out_dir: str,
-    terms: list,
-    hw_table: str,
-    hw_schema: str,
-    legacy_ok: bool,
-) -> tuple[int, int | None, list]:
+    spark: SparkSession, out_dir: str, terms: list, spec: _DeltaStore
+) -> tuple[int, int, list]:
     """The per-serve prologue reads — bucket modulus (meta),
     committed high-water mark (the store's commit-point table), and
     the query terms' bucket ids — fused into ONE bounded Spark job
@@ -2148,18 +2413,13 @@ def _serve_prologue(
     values and the pmod lands driver-side: for int64 h and positive
     modulus n, Python's ``h % n`` equals Spark's ``pmod(h, n)``
     (both are the floored/positive remainder), so the bucket ids are
-    bit-identical to the writer's _tok_bucket_col.
-
-    ``hw_table``/``hw_schema``: "totals" for the frequency store
-    (every writer's LAST write), "batches" for the ledger stores.
-    ``legacy_ok=True`` mirrors _ledger_hw: a pre-ledger store (no
-    commit-point dir) serves append-only (hw None) instead of
-    raising; False preserves the frequency store's strict contract
-    (totals must exist — the read raises as _next_postings_batch
-    did). Returns (n_buckets, hw, sorted bucket ids)."""
+    bit-identical to the writer's _tok_bucket_col. A store without
+    its commit table is refused (_require_commit). Returns
+    (n_buckets, hw, sorted bucket ids)."""
     from pyspark.sql import functions as F
 
     _require_postings_meta(spark, out_dir)
+    _require_commit(spark, out_dir, spec)
     uniq = sorted({str(t) for t in terms})
     if not uniq:
         # explode of an empty term array yields zero rows and would
@@ -2169,7 +2429,7 @@ def _serve_prologue(
         # terms, bm25's isin(*terms) fails earlier), but fail with
         # the real reason for future internal callers.
         raise ValueError("at least one query term required")
-    probe = (
+    rows = (
         spark.range(1)
         .select(
             F.explode(F.array(*[F.lit(t) for t in uniq])).alias(
@@ -2182,33 +2442,25 @@ def _serve_prologue(
                 f"{out_dir}/meta"
             )
         )
-    )
-    has_hw = True
-    if legacy_ok:
-        fs, hw_p = _hadoop_path(spark, f"{out_dir}/{hw_table}")
-        has_hw = fs.exists(hw_p)
-    if has_hw:
-        probe = probe.crossJoin(
-            spark.read.schema(hw_schema)
-            .parquet(f"{out_dir}/{hw_table}")
+        .crossJoin(
+            spark.read.schema(spec.commit_schema)
+            .parquet(f"{out_dir}/{spec.commit}")
             .agg(F.max("batch_id").alias("mx"))
         )
-    rows = probe.collect()
+        .collect()
+    )
     if not rows:
         raise ValueError(f"{out_dir}/meta is empty")
     n_buckets = int(rows[0]["n_buckets"])
-    hw = None
-    if has_hw:
-        mx = rows[0]["mx"]
-        hw = max(0, (mx if mx is not None else -1) + 1)
+    mx = rows[0]["mx"]
+    hw = max(0, (mx if mx is not None else -1) + 1)
     buckets = sorted({int(r["h"]) % n_buckets for r in rows})
     return n_buckets, hw, buckets
 
 
 def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
-    """(postings, totals) delta frames for one document set — shared
-    by the batch builder and the streaming maintainer so the two
-    paths cannot drift."""
+    """postings + doclens delta frames for one document set — the
+    frequency store's frame builder (every writer, one codepath)."""
     from pyspark.sql import functions as F
 
     # Split ONCE into a carried array, then size()/explode() the
@@ -2239,13 +2491,7 @@ def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
         # directory count.
         .repartition(F.col("tok_bucket"))
     )
-    totals = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias(
-            "n_tokens"
-        ),
-    ).withColumn("batch_id", F.lit(batch_id))
-    return tf, totals
+    return {"postings": tf, "doclens": _doclens_frame(docs, batch_id)}
 
 
 def _postings_meta_buckets(
@@ -2298,14 +2544,6 @@ def _doclens_frame(docs: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def _max_tombstones(
-    spark: SparkSession, out_dir: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Document-store view of _tombstones_view (schema
-    _TOMBSTONES_SCHEMA)."""
-    return _tombstones_view(spark, out_dir, "doc_id", before_batch)
-
-
 def _live_doclens(
     spark: SparkSession, out_dir: str, before_batch: int | None = None
 ) -> DataFrame:
@@ -2324,7 +2562,7 @@ def _live_doclens(
         F.max_by("dl", "batch_id").alias("dl"),
         F.max("batch_id").alias("b"),
     )
-    tomb = _max_tombstones(spark, out_dir, before_batch)
+    tomb = _tombstones_view(spark, out_dir, "doc_id", before_batch)
     if tomb is not None:
         latest = (
             latest.join(tomb, "doc_id", "left")
@@ -2361,29 +2599,7 @@ def write_posting_lists(
     streaming/jobs.maintain_posting_lists appends (``batch_id>=0``
     deltas), so batch-built and stream-maintained stores serve
     through the same reader."""
-    tf, _ = _posting_frames(docs, -1, n_buckets)
-    spark = docs.sparkSession
-    # postings and doclens are INDEPENDENT non-commit writes over the
-    # same input — overlap them (guide §2.6, _overlap_writes); totals
-    # (the effective commit point) and meta follow, ordered.
-    _overlap_writes(
-        lambda: tf.write.mode("overwrite")
-        .partitionBy("batch_id", "tok_bucket")
-        .parquet(f"{out_dir}/postings"),
-        lambda: _doclens_frame(docs, -1)
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{out_dir}/doclens"),
-    )
-    # totals from the doclens ledger JUST WRITTEN (r13): n_docs is its
-    # row count and n_tokens the sum of its dl column — dl is the
-    # same size(split(text)) expression, so the values are identical
-    # to aggregating the corpus again, minus the third full tokenize
-    # pass the build paid (tf, totals, doclens each re-scanned docs).
-    _totals_from_doclens(spark, out_dir, -1).coalesce(1).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").parquet(f"{out_dir}/totals")
-    _write_postings_meta(spark, out_dir, n_buckets)
+    _store_write(_FREQUENCY, docs, out_dir, n_buckets)
 
 
 def _totals_from_doclens(
@@ -2421,25 +2637,6 @@ def _totals_from_doclens(
         )
         .withColumn("batch_id", F.lit(int(batch_id)))
     )
-
-
-def _next_postings_batch(spark: SparkSession, out_dir: str) -> int:
-    """One past the newest batch the store has COMMITTED — derived
-    from the totals table because totals is every writer's LAST
-    write (the commit point): a crashed revision's partial postings/
-    doclens/tombstone partitions at the uncommitted batch id are
-    excluded from prior-state reads (before_batch) and overwritten
-    when the revision re-runs with the SAME id — idempotent
-    convergence without a log."""
-    from pyspark.sql import functions as F
-
-    mx = (
-        spark.read.schema(_POSTINGS_TOTALS_SCHEMA)
-        .parquet(f"{out_dir}/totals")
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
-    )
-    return max(0, (mx if mx is not None else -1) + 1)
 
 
 def _corrected_totals(
@@ -2488,6 +2685,42 @@ def _corrected_totals(
     )
 
 
+def _totals_row(spark, out_dir, docs, ids, batch_id) -> DataFrame:
+    """Commit row of the frequency store: the batch's (n_docs,
+    n_tokens) totals delta, read back from the doclens partition the
+    batch just wrote (_totals_from_doclens). With revisions (``ids``)
+    on a store that has committed totals, a CORRECTION: new counts
+    minus the replaced versions' (_corrected_totals), so n_docs/avgdl
+    fold additively to the rebuilt-corpus values; a delete is the
+    negative correction alone."""
+    new = None
+    if docs is not None:
+        new = _totals_from_doclens(spark, out_dir, batch_id)
+    fs, p = _hadoop_path(spark, f"{out_dir}/totals")
+    if ids is None or not fs.exists(p):  # nothing committed to replace
+        return new
+    return _corrected_totals(
+        spark,
+        out_dir,
+        ids,
+        batch_id,
+        None if new is None else new.drop("batch_id"),
+    )
+
+
+_FREQUENCY = _DeltaStore(
+    what="posting-list store",
+    schema=_POSTINGS_SCHEMA,
+    parts=("batch_id", "tok_bucket"),
+    frames=_posting_frames,
+    commit="totals",
+    commit_schema=_POSTINGS_TOTALS_SCHEMA,
+    commit_row=_totals_row,
+    bucketed=True,
+    deltas=("postings", "doclens"),
+)
+
+
 def revise_posting_lists(
     spark: SparkSession, docs_v2: DataFrame, out_dir: str
 ) -> int:
@@ -2496,122 +2729,23 @@ def revise_posting_lists(
     own workflow re-probes and re-ingests channels (its ledger exists
     precisely because reruns happen, data_pipeline.py:559-577), and
     a re-crawled CHANGED document under the append-only contract
-    double-counts in postings and totals. Semantics: every doc_id in
-    `docs_v2` (unique within the batch) replaces its previous version
-    exactly once; doc_ids new to the store are plain inserts.
-
-    Mechanics — one revision batch N = _next_postings_batch():
-
-    1. new postings/doclens rows land under ``batch_id=N`` (the
-       ordinary delta layout, bucket-bounded like any other batch);
-    2. a TOMBSTONE (doc_id, N) is written for every revised id —
-       readers drop that doc's rows from batches < N, so the old
-       version disappears and the new one (written AT N) serves;
-    3. a totals CORRECTION delta rides the same batch: new counts
-       minus the replaced versions' counts (old dl from the
-       O(n_docs) doclens ledger — the postings themselves are never
-       scanned), so n_docs/avgdl additively fold to exactly the
-       rebuilt-corpus values.
-
-    Postings/doclens/tombstones are independent deltas written
-    concurrently (guide §2.6); totals follows them and is the COMMIT
-    POINT: a crash before totals lands leaves the batch uncommitted
-    (whatever subset of the three deltas exists), prior-state reads
-    exclude it (before_batch=N), and a re-run reuses id N,
-    overwriting the partial partitions. Run while any maintenance stream on this
-    store is stopped — the claimed id is FENCED
-    (claim_offline_batch), so a stream resuming its old checkpoint
-    afterwards fails loudly instead of clobbering this revision's
-    partitions with its colliding micro-batch id (ADVICE r10; the
-    remedy is compact + fresh checkpoint). Returns the batch id
-    used."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    next_b = _next_postings_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_posting_lists at {out_dir}",
-        next_b,
-        [
-            f"{out_dir}/postings",
-            f"{out_dir}/doclens",
-            f"{out_dir}/tombstones",
-        ],
+    double-counts in postings and totals. One revision batch N: new
+    postings/doclens rows AT N, a tombstone (doc_id, N) per revised
+    id, and the totals correction (old dl from the O(n_docs) doclens
+    ledger — the postings are never scanned) as the commit row."""
+    return _store_revise(
+        _FREQUENCY, spark, docs_v2, out_dir, "revise_posting_lists"
     )
-    ids = docs_v2.select("doc_id").distinct()
-    tf, _ = _posting_frames(docs_v2, next_b, nb)
-    # postings, doclens and tombstones are independent non-commit
-    # deltas BELOW the commit point (totals, last): overlap them
-    # (guide §2.6, _overlap_writes) — a crash inside any subset leaves
-    # the batch uncommitted exactly as the sequential order did, and
-    # the re-run's dynamic overwrite replaces all three partitions.
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            tf, ["batch_id", "tok_bucket"], f"{out_dir}/postings"
-        ),
-        lambda: _dyn_overwrite(
-            _doclens_frame(docs_v2, next_b),
-            ["batch_id"],
-            f"{out_dir}/doclens",
-        ),
-        lambda: _tombstone_write(
-            ids, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # totals LAST — the commit point. The new-side counts read the
-    # doclens partition JUST WRITTEN (r13, _totals_from_doclens) —
-    # same values as re-aggregating docs_v2, one tokenize pass
-    # saved; the old-side fold still excludes this batch
-    # (before_batch=next_b), so a crashed re-run recomputes the
-    # identical correction.
-    totals_delta = _corrected_totals(
-        spark,
-        out_dir,
-        ids,
-        next_b,
-        _totals_from_doclens(spark, out_dir, next_b).drop("batch_id"),
-    )
-    _dyn_overwrite(
-        totals_delta.coalesce(1), ["batch_id"], f"{out_dir}/totals"
-    )
-    return next_b
 
 
 def delete_posting_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
-    """Remove documents from a posting-list store: tombstones for the
-    ids (killing ALL their prior rows — no replacement rows follow)
-    plus the negative totals correction, derived from the doclens
-    ledger like revise_posting_lists. Ids absent from the store are
-    no-ops (their tombstone kills nothing and contributes nothing to
-    the correction). Same commit-point ordering: totals last."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_postings_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_posting_docs at {out_dir}",
-        next_b,
-        [
-            f"{out_dir}/postings",
-            f"{out_dir}/doclens",
-            f"{out_dir}/tombstones",
-        ],
+    """Remove documents from a posting-list store: tombstones plus
+    the negative totals correction from the doclens ledger."""
+    return _store_delete(
+        _FREQUENCY, spark, doc_ids, out_dir, "delete_posting_docs"
     )
-    ids = doc_ids.select("doc_id").distinct()
-    totals_delta = _corrected_totals(spark, out_dir, ids, next_b, None)
-    _tombstone_write(ids, "doc_id", next_b, f"{out_dir}/tombstones")
-    # totals LAST — the commit point
-    _dyn_overwrite(
-        totals_delta.coalesce(1), ["batch_id"], f"{out_dir}/totals"
-    )
-    return next_b
 
 
 # positional postings: the phrase/proximity-query layout (positions
@@ -2637,9 +2771,8 @@ _LEDGER_SCHEMA = "n_docs bigint, batch_id int"
 def _positional_frames(
     docs: DataFrame, batch_id: int, n_buckets: int
 ):
-    """(postings, batches) delta frames for one document set — shared
-    by the batch builder, the offline revision path, and the
-    streaming maintainer so the three cannot drift."""
+    """The positional store's postings delta frame for one document
+    set."""
     from pyspark.sql import functions as F
 
     # ONE exchange where the groupBy→repartition form cost two (r12):
@@ -2662,10 +2795,19 @@ def _positional_frames(
         .agg(F.sort_array(F.collect_list("pos")).alias("pos"))
         .withColumn("batch_id", F.lit(batch_id))
     )
-    batches = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn("batch_id", F.lit(batch_id))
-    return rows, batches
+    return {"postings": rows}
+
+
+_POSITIONAL = _DeltaStore(
+    what="positional posting store",
+    schema=_POS_POSTINGS_SCHEMA,
+    parts=("batch_id", "tok_bucket"),
+    frames=_positional_frames,
+    commit="batches",
+    commit_schema=_LEDGER_SCHEMA,
+    commit_row=_ledger_count,
+    bucketed=True,
+)
 
 
 def write_positional_postings(
@@ -2684,141 +2826,30 @@ def write_positional_postings(
     written last) is what revision/serve paths derive the committed
     high-water mark from — the totals table's role in the frequency
     store, without corpus statistics phrase scoring doesn't need."""
-    rows, batches = _positional_frames(docs, -1, n_buckets)
-    spark = docs.sparkSession
-    # rows and the 1-row meta are independent non-commit writes —
-    # overlap them (guide §2.6); the batches ledger (commit point)
-    # stays LAST. A crash can now leave meta without rows where the
-    # sequential order guaranteed rows-before-meta, but either way
-    # the store is uncommitted (no ledger) and the re-run's
-    # mode=overwrite build replaces both.
-    _overlap_writes(
-        lambda: rows.write.mode("overwrite")
-        .partitionBy("batch_id", "tok_bucket")
-        .parquet(f"{out_dir}/postings"),
-        lambda: _write_postings_meta(spark, out_dir, n_buckets),
-    )
-    batches.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
-
-
-def _ledger_hw(spark: SparkSession, out_dir: str) -> int | None:
-    """One past the newest COMMITTED batch (max over the batches
-    ledger — every writer's LAST write), or None for a store built
-    before the ledger existed (ADVICE r11: the pre-ledger legacy
-    store keeps its original read semantics — no commit-point filter
-    — instead of raising path-not-found at serve time; the
-    _ivf_committed_hw fallback, mirrored)."""
-    from pyspark.sql import functions as F
-
-    fs, p = _hadoop_path(spark, f"{out_dir}/batches")
-    if not fs.exists(p):
-        return None
-    mx = (
-        spark.read.schema(_LEDGER_SCHEMA)
-        .parquet(f"{out_dir}/batches")
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
-    )
-    return max(0, (mx if mx is not None else -1) + 1)
-
-
-def _next_ledger_batch(spark: SparkSession, out_dir: str) -> int:
-    """The batch id an offline WRITER claims next: the committed
-    high-water mark (crashed partials at the uncommitted id are
-    excluded from reads and overwritten when the operation re-runs
-    with the same id — the _next_postings_batch contract, verbatim).
-    A legacy pre-ledger store (no batches dir) falls back to one past
-    the PHYSICAL max batch id across its row/tombstone dirs — those
-    stores are batch-built (batch_id=-1 only; the positional/shingle
-    maintainers have always written a ledger), so the fallback yields
-    0 and the store gains a ledger from this revision onward."""
-    hw = _ledger_hw(spark, out_dir)
-    if hw is not None:
-        return hw
-    mx = -1
-    for sub in ("postings", "tombstones"):
-        ids = _physical_batch_ids(spark, f"{out_dir}/{sub}")
-        if ids:
-            mx = max(mx, max(ids))
-    return max(0, mx + 1)
+    _store_write(_POSITIONAL, docs, out_dir, n_buckets)
 
 
 def revise_positional_postings(
     spark: SparkSession, docs_v2: DataFrame, out_dir: str
 ) -> int:
     """UPSERT re-ingested documents into a positional posting store —
-    the lifecycle its frequency twin got in r10 (r10 VERDICT next
-    #1): a re-crawled CHANGED document changes its token POSITIONS,
-    so under the append-only contract a phrase query would see both
-    the stale and the fresh position arrays (df-style double counting
-    becomes phantom/lost phrase hits). Same tombstone mechanics as
-    revise_posting_lists: every doc_id in `docs_v2` (unique within
-    the batch) writes fresh position rows AT batch N and a tombstone
-    (doc_id, N) killing its rows from batches < N; no totals
-    correction exists because phrase scoring consults no corpus
-    statistics. Postings and tombstones are written concurrently;
-    the batches ledger row follows them LAST as the commit point
-    (a crash before it leaves the batch uncommitted, whatever subset
-    of the two deltas exists); the claimed id is FENCED
-    against a resumed maintenance stream (claim_offline_batch).
-    Returns the batch id used."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_positional_postings at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    a re-crawled CHANGED document changes its token POSITIONS, so
+    under the append-only contract a phrase query would see both the
+    stale and the fresh arrays (phantom/lost phrase hits). Fresh rows
+    AT batch N, tombstone (doc_id, N); no totals correction — phrase
+    scoring consults no corpus statistics. Returns the batch id."""
+    return _store_revise(
+        _POSITIONAL, spark, docs_v2, out_dir, "revise_positional_postings"
     )
-    rows, batches = _positional_frames(docs_v2, next_b, nb)
-    # rows and tombstones are independent non-commit deltas below the
-    # ledger commit point — overlap them (guide §2.6, _overlap_writes;
-    # readers only see tombstones below the committed high-water mark)
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            rows, ["batch_id", "tok_bucket"], f"{out_dir}/postings"
-        ),
-        lambda: _tombstone_write(
-            docs_v2, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # ledger LAST — the commit point
-    _dyn_overwrite(
-        batches.coalesce(1), ["batch_id"], f"{out_dir}/batches"
-    )
-    return next_b
 
 
 def delete_positional_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
-    """Remove documents from a positional posting store: tombstones
-    for the ids (killing ALL their prior rows — no replacement rows
-    follow) plus the commit-ledger row. Ids absent from the store
-    are no-ops. Same commit-point ordering: batches last."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_positional_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    """Remove documents from a positional posting store."""
+    return _store_delete(
+        _POSITIONAL, spark, doc_ids, out_dir, "delete_positional_docs"
     )
-    _tombstone_write(
-        doc_ids, "doc_id", next_b, f"{out_dir}/tombstones"
-    )
-    # ledger LAST — the commit point
-    _ledger_row(spark, f"{out_dir}/batches", next_b)
-    return next_b
 
 
 def _pivot_positions(p: DataFrame, terms: tuple[str, ...]) -> DataFrame:
@@ -2850,9 +2881,8 @@ def _pivot_live_positions(
     array in its own column (p0..pK-1) — shared by phrase / proximity
     / ordered-near / AND-ranked so the lifecycle semantics cannot
     drift between query classes. Committed batches only (high-water
-    mark from the batches ledger; hw None for a legacy pre-ledger
-    store serves append-only — ADVICE r11), <=K bucket-dir partition
-    filter + in-bucket term cut.
+    mark from the batches ledger), <=K bucket-dir partition filter +
+    in-bucket term cut.
 
     The tombstone kill rule is FUSED INTO the pivot (r13, guide §2.4
     one-exchange-satisfies-both): the tombstone markers are unioned
@@ -2883,25 +2913,24 @@ def _pivot_live_positions(
     # ONE fused prologue job: bucket modulus + committed high-water
     # mark + term bucket ids
     n_buckets, hw, buckets = _serve_prologue(
-        spark, out_dir, list(terms), "batches", _LEDGER_SCHEMA, True
+        spark, out_dir, list(terms), _POSITIONAL
     )
     p = (
         spark.read.schema(_POS_POSTINGS_SCHEMA)
         .parquet(f"{out_dir}/postings")
         .filter(F.col("tok_bucket").isin(buckets))
         .filter(F.col("tok").isin(sorted(set(terms))))
+        .filter(F.col("batch_id") < hw)  # committed only
     )
-    if hw is not None:
-        p = p.filter(F.col("batch_id") < hw)  # committed only
     fs, tp = _hadoop_path(spark, f"{out_dir}/tombstones")
     if not fs.exists(tp):
         # append-only fast path: the plain pivot, no union
         return _pivot_positions(p, terms)
-    t = spark.read.schema("doc_id bigint, batch_id int").parquet(
-        f"{out_dir}/tombstones"
+    t = (
+        spark.read.schema("doc_id bigint, batch_id int")
+        .parquet(f"{out_dir}/tombstones")
+        .filter(F.col("batch_id") < hw)  # committed only
     )
-    if hw is not None:
-        t = t.filter(F.col("batch_id") < hw)  # committed only
     u = p.select(
         "doc_id", "tok", "pos", "batch_id", F.lit(False).alias("tomb")
     ).unionByName(
@@ -3168,62 +3197,9 @@ def and_ranked_from_postings(
 def compact_positional_postings(
     spark: SparkSession, out_dir: str
 ) -> None:
-    """Fold a positional posting store's per-batch deltas into a
-    single ``batch_id=-1`` base and fold its TOMBSTONES OUT —
-    position rows killed by a newer tombstone are physically
-    dropped, the commit ledger folds to one row, and the rewritten
-    store carries no tombstones or fence, so serve reads are back on
-    the no-join fast path and a fresh-checkpoint stream legitimately
-    restarts at id 0. The WHOLE store directory is rewritten to a
-    temp sibling and swapped by ONE swap_compacted call (the
-    compact_posting_lists crash-window rationale verbatim: folding
-    rows to -1 while live tombstones survive would kill the entire
-    base). Folds the COMMITTED state only. Run while the maintenance
-    stream is stopped."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)  # None: legacy store, fold all
-    p = spark.read.schema(_POS_POSTINGS_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        p = p.filter(F.col("batch_id") < hw)
-    p = _kill_tombstoned(spark, p, out_dir, "doc_id", hw)
-
-    def _write(tmp: str) -> None:
-        (
-            p.withColumn("batch_id", F.lit(-1))
-            .repartition(F.col("tok_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "tok_bucket")
-            .parquet(f"{tmp}/postings")
-        )
-        # informational live-document count for the folded ledger
-        # row, counted from the COMPACTED rows just written: the
-        # previous form re-evaluated the whole live view (pruned
-        # read + tombstone join) a second time; this is one
-        # column-pruned read of the smaller folded store, same value
-        live_docs = (
-            spark.read.schema("doc_id bigint")
-            .parquet(f"{tmp}/postings")
-            .select("doc_id")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        )
-        (
-            live_docs.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
-        _write_postings_meta(spark, tmp, nb)
-
-    swap_compacted(
-        spark, out_dir, _write, "positional posting store"
-    )
+    """Fold a positional posting store's committed deltas into one
+    ``batch_id=-1`` base, tombstones folded out (_store_compact)."""
+    _store_compact(_POSITIONAL, spark, out_dir)
 
 
 # shingle (near-dup screening) index store: the materialized corpus
@@ -3237,15 +3213,14 @@ def compact_positional_postings(
 _SHINGLE_INDEX_SCHEMA = "doc_id bigint, m int, h bigint, batch_id int"
 
 
-def _shingle_frames(docs: DataFrame, batch_id: int):
-    """(rows, ledger) delta frames for one document set: rows =
-    (doc_id, m, h) with h the xxhash64 of each distinct 5-token
-    shingle and m the doc's distinct-shingle count carried alongside
-    (so Jaccard needs no join back to the documents — the
-    queries/text._shingle_index convention). Shared by the batch
-    builder, the revision path, the probe side, and the streaming
-    maintainer. Short docs (no shingles) contribute no rows but
-    still count in the ledger."""
+def _shingle_frames(docs: DataFrame, batch_id: int, n_buckets=None):
+    """The shingle index's rows delta for one document set: (doc_id,
+    m, h) with h the xxhash64 of each distinct 5-token shingle and m
+    the doc's distinct-shingle count carried alongside (so Jaccard
+    needs no join back to the documents — the
+    queries/text._shingle_index convention). Also the probe side of
+    near_dups_from_index. Short docs (no shingles) contribute no rows
+    but still count in the ledger."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.text import word_shingles_udf
@@ -3266,10 +3241,18 @@ def _shingle_frames(docs: DataFrame, batch_id: int):
         )
         .withColumn("batch_id", F.lit(batch_id))
     )
-    ledger = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn("batch_id", F.lit(batch_id))
-    return rows, ledger
+    return {"postings": rows}
+
+
+_SHINGLE = _DeltaStore(
+    what="shingle index",
+    schema=_SHINGLE_INDEX_SCHEMA,
+    parts=("batch_id",),
+    frames=_shingle_frames,
+    commit="batches",
+    commit_schema=_LEDGER_SCHEMA,
+    commit_row=_ledger_count,
+)
 
 
 def write_shingle_index(docs: DataFrame, out_dir: str) -> None:
@@ -3279,13 +3262,7 @@ def write_shingle_index(docs: DataFrame, out_dir: str) -> None:
     key (never the ~40-byte shingle string — the _shingle_index
     rationale); the shingle pass over the corpus text runs ONCE
     here, and every later ingest screen reads this instead."""
-    rows, ledger = _shingle_frames(docs, -1)
-    rows.write.mode("overwrite").partitionBy("batch_id").parquet(
-        f"{out_dir}/postings"
-    )
-    ledger.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
+    _store_write(_SHINGLE, docs, out_dir)
 
 
 def revise_shingle_docs(
@@ -3294,62 +3271,19 @@ def revise_shingle_docs(
     """UPSERT re-ingested documents into the shingle index: a
     re-crawled CHANGED document changes both its shingle set and its
     m, so stale rows make every Jaccard involving the doc wrong (and
-    split its pair groups in two). Same mechanics as the positional
-    store: fresh rows AT batch N, tombstone (doc_id, N) killing
-    batches < N, ledger row LAST as the commit point, the claimed id
-    fenced against a resumed maintenance stream."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_shingle_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    split its pair groups in two)."""
+    return _store_revise(
+        _SHINGLE, spark, docs_v2, out_dir, "revise_shingle_docs"
     )
-    rows, ledger = _shingle_frames(docs_v2, next_b)
-    # rows and tombstones overlap below the ledger commit point
-    # (guide §2.6, _overlap_writes — the revise_posting_lists argument)
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            rows, ["batch_id"], f"{out_dir}/postings"
-        ),
-        lambda: _tombstone_write(
-            docs_v2, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # ledger LAST — the commit point
-    _dyn_overwrite(
-        ledger.coalesce(1), ["batch_id"], f"{out_dir}/batches"
-    )
-    return next_b
 
 
 def delete_shingle_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
-    """Remove documents from the shingle index: tombstones + the
-    commit-ledger row (no replacement rows). Ids absent from the
-    index are no-ops."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_shingle_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    """Remove documents from the shingle index."""
+    return _store_delete(
+        _SHINGLE, spark, doc_ids, out_dir, "delete_shingle_docs"
     )
-    _tombstone_write(
-        doc_ids, "doc_id", next_b, f"{out_dir}/tombstones"
-    )
-    # ledger LAST — the commit point
-    _ledger_row(spark, f"{out_dir}/batches", next_b)
-    return next_b
 
 
 def near_dups_from_index(
@@ -3374,16 +3308,8 @@ def near_dups_from_index(
     version reports itself at Jaccard 1."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)  # None: legacy, no commit filter
-    idx = spark.read.schema(_SHINGLE_INDEX_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        idx = idx.filter(F.col("batch_id") < hw)  # committed only
-    idx = _kill_tombstoned(spark, idx, out_dir, "doc_id", hw)
-    probe_rows, _ = _shingle_frames(new_docs, -1)
-    probe = probe_rows.select(
+    idx = _store_live(_SHINGLE, spark, out_dir)
+    probe = _shingle_frames(new_docs, -1)["postings"].select(
         F.col("doc_id").alias("new_doc"),
         F.col("m").alias("ma"),
         "h",
@@ -3416,50 +3342,9 @@ def near_dups_from_index(
 
 
 def compact_shingle_index(spark: SparkSession, out_dir: str) -> None:
-    """Fold the shingle index's per-batch deltas into one
-    ``batch_id=-1`` base and fold its tombstones (and fence) OUT —
-    the whole-store atomic-swap contract of the other compactors.
-    Folds the COMMITTED state only; run while the maintenance stream
-    is stopped."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)  # None: legacy store, fold all
-    rows = spark.read.schema(_SHINGLE_INDEX_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        rows = rows.filter(F.col("batch_id") < hw)
-    rows = _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
-
-    def _write(tmp: str) -> None:
-        (
-            rows.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/postings")
-        )
-        # ledger doc count from the COMPACTED rows just written (one
-        # explicit read schema: a zero-row fold writes no files and
-        # schema inference would raise on the empty dir
-        # column-pruned read) instead of a second evaluation of the
-        # live view's pruned read + tombstone join — same value
-        live_docs = (
-            spark.read.schema("doc_id bigint")
-            .parquet(f"{tmp}/postings")
-            .select("doc_id")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        )
-        (
-            live_docs.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
-
-    swap_compacted(spark, out_dir, _write, "shingle index")
+    """Fold the shingle index's committed deltas into one
+    ``batch_id=-1`` base, tombstones folded out (_store_compact)."""
+    _store_compact(_SHINGLE, spark, out_dir)
 
 
 # MinHash-LSH band-index store (r12 — store #6, built ENTIRELY on the
@@ -3479,12 +3364,11 @@ _MINHASH_INDEX_SCHEMA = (
 )
 
 
-def _minhash_frames(docs: DataFrame, batch_id: int):
-    """(rows, ledger) delta frames for one document set — one
+def _minhash_frames(docs: DataFrame, batch_id: int, n_buckets=None):
+    """The band index's rows delta for one document set — one
     Arrow-batched signature pass (the minhash_lsh_candidates kernel),
-    shared by the batch builder, the revision path, the probe side,
-    and the streaming maintainer. Docs with <5 tokens contribute no
-    band rows but still count in the ledger."""
+    also the probe side of lsh_candidates_from_index. Docs with <5
+    tokens contribute no band rows but still count in the ledger."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.queries.text import _mh_band_rows
@@ -3492,91 +3376,43 @@ def _minhash_frames(docs: DataFrame, batch_id: int):
     rows = docs.select("doc_id", "text").mapInPandas(
         _mh_band_rows, "doc_id long, band long, sig string"
     ).withColumn("batch_id", F.lit(batch_id))
-    ledger = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn("batch_id", F.lit(batch_id))
-    return rows, ledger
+    return {"postings": rows}
+
+
+_MINHASH = _DeltaStore(
+    what="minhash band index",
+    schema=_MINHASH_INDEX_SCHEMA,
+    parts=("batch_id",),
+    frames=_minhash_frames,
+    commit="batches",
+    commit_schema=_LEDGER_SCHEMA,
+    commit_row=_ledger_count,
+)
 
 
 def write_minhash_index(docs: DataFrame, out_dir: str) -> None:
     """Materialize the LSH band index: ``batch_id=-1`` base + the
     batches commit ledger (written LAST)."""
-    rows, ledger = _minhash_frames(docs, -1)
-    rows.write.mode("overwrite").partitionBy("batch_id").parquet(
-        f"{out_dir}/postings"
-    )
-    ledger.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
+    _store_write(_MINHASH, docs, out_dir)
 
 
 def revise_minhash_docs(
     spark: SparkSession, docs_v2: DataFrame, out_dir: str
 ) -> int:
     """UPSERT re-ingested documents (a changed document changes its
-    signature, so stale band rows produce phantom/lost candidates):
-    fresh rows AT batch N, tombstone (doc_id, N), ledger row LAST —
-    the shared protocol, via the shared helpers only."""
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_minhash_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    signature, so stale band rows produce phantom/lost candidates)."""
+    return _store_revise(
+        _MINHASH, spark, docs_v2, out_dir, "revise_minhash_docs"
     )
-    rows, ledger = _minhash_frames(docs_v2, next_b)
-    # rows and tombstones overlap below the ledger commit point
-    # (guide §2.6, _overlap_writes — the revise_posting_lists argument)
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            rows, ["batch_id"], f"{out_dir}/postings"
-        ),
-        lambda: _tombstone_write(
-            docs_v2, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # ledger LAST — the commit point (via the shared helper)
-    _dyn_overwrite(
-        ledger.coalesce(1), ["batch_id"], f"{out_dir}/batches"
-    )
-    return next_b
 
 
 def delete_minhash_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
-    """Remove documents: tombstones + the ledger commit row."""
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_minhash_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    """Remove documents from the band index."""
+    return _store_delete(
+        _MINHASH, spark, doc_ids, out_dir, "delete_minhash_docs"
     )
-    _tombstone_write(
-        doc_ids, "doc_id", next_b, f"{out_dir}/tombstones"
-    )
-    _ledger_row(spark, f"{out_dir}/batches", next_b)
-    return next_b
-
-
-def _minhash_live(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed, tombstone-live band rows — the store's one serve
-    view (shared-helper composition, no store-specific protocol)."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)
-    rows = spark.read.schema(_MINHASH_INDEX_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        rows = rows.filter(F.col("batch_id") < hw)
-    return _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
 
 
 def lsh_candidates_from_index(
@@ -3592,10 +3428,10 @@ def lsh_candidates_from_index(
     distinct shingle); recall is LSH-probabilistic by design."""
     from pyspark.sql import functions as F
 
-    idx = _minhash_live(spark, out_dir)
-    probe_rows, _ = _minhash_frames(new_docs, -1)
+    idx = _store_live(_MINHASH, spark, out_dir)
     return (
-        probe_rows.select(
+        _minhash_frames(new_docs, -1)["postings"]
+        .select(
             F.col("doc_id").alias("new_doc"), "band", "sig"
         )
         .join(
@@ -3611,32 +3447,9 @@ def lsh_candidates_from_index(
 
 
 def compact_minhash_index(spark: SparkSession, out_dir: str) -> None:
-    """Fold deltas into one ``batch_id=-1`` base, tombstones (and
-    fence) OUT — the whole-store atomic-swap contract, entirely via
-    the shared helpers."""
-    from pyspark.sql import functions as F
-
-    rows = _minhash_live(spark, out_dir)
-    live_docs = rows.select("doc_id").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-
-    def _write(tmp: str) -> None:
-        (
-            rows.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/postings")
-        )
-        (
-            live_docs.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
-
-    swap_compacted(spark, out_dir, _write, "minhash band index")
+    """Fold the band index's committed deltas into one ``batch_id=-1``
+    base, tombstones folded out (_store_compact)."""
+    _store_compact(_MINHASH, spark, out_dir)
 
 
 def compact_posting_lists(spark: SparkSession, out_dir: str) -> None:
@@ -3670,7 +3483,7 @@ def compact_posting_lists(spark: SparkSession, out_dir: str) -> None:
     # fold the COMMITTED state only: a crashed revision's partial
     # postings/tombstones (its totals commit point never landed) must
     # not be folded into the base with their correction missing
-    hw = _next_postings_batch(spark, out_dir)
+    hw = _committed_hw(spark, out_dir, _FREQUENCY)
     p = (
         spark.read.schema(_POSTINGS_SCHEMA)
         .parquet(f"{out_dir}/postings")
@@ -3757,12 +3570,7 @@ def bm25_from_postings(
     # otherwise drop the old rows while totals still count them)
     # until its re-run lands the commit point.
     n_buckets, hw, buckets = _serve_prologue(
-        spark,
-        out_dir,
-        list(terms),
-        "totals",
-        _POSTINGS_TOTALS_SCHEMA,
-        False,
+        spark, out_dir, list(terms), _FREQUENCY
     )
     p = (
         spark.read.schema(_POSTINGS_SCHEMA)

@@ -1212,75 +1212,47 @@ _TERM_STATS_SCHEMA = (
 _CORPUS_TOTALS_SCHEMA = "n_docs bigint, n_tokens bigint, batch_id int"
 
 
-def maintain_posting_lists(
+def maintain_delta_store(
+    spec,
     docs_stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
     n_buckets: int | None = None,
     allow_revisions: bool = False,
 ):
-    """Incremental BM25 posting-list maintenance: each micro-batch of
-    documents appends its (term, doc_id, tf, dl) rows under a
-    ``batch_id=N/tok_bucket=...`` partition plus a doclens-ledger
-    delta and a one-row totals delta — the SAME frames as the batch
-    builder (sources/layout._posting_frames, one codepath), so a
-    stream-maintained store serves through bm25_from_postings
-    unchanged and a periodic compact_posting_lists folds the deltas
-    back to the base. The bucket modulus comes from the store's meta
-    table when the store already exists (a restart with a different
-    `n_buckets` argument must NOT fork the layout mid-store), else
-    from `n_buckets` (default POSTINGS_TOK_BUCKETS) and is recorded
-    in meta on the first delta.
+    """Incremental maintenance of a sources/layout delta store (its
+    _DeltaStore spec): each micro-batch is localCheckpoint → skip if
+    empty → fence guard → layout._apply_batch, the SAME batch writer
+    as the offline revise path, so batch-built and stream-maintained
+    stores serve through the same readers and compact the same way.
 
-    ``allow_revisions=False`` (default) keeps the append-only-unique-
-    doc_ids contract of maintain_term_stats: cheapest path, no
-    read-side work per batch. ``allow_revisions=True`` is the
-    streaming twin of sources/layout.revise_posting_lists: a batch
-    may RE-EMIT doc_ids already in the store — each gets a tombstone
-    at this batch id (killing its older rows for every reader) and
-    the totals delta becomes a CORRECTION (new counts minus the
-    replaced versions', old dl from the O(n_docs) doclens ledger —
-    one bounded fold per micro-batch, the price of upsert semantics).
+    A bucketed store's modulus comes from its meta table when the
+    store exists (a restart with a different `n_buckets` must NOT
+    fork the layout mid-store), else from `n_buckets` (default
+    POSTINGS_TOK_BUCKETS), recorded by the store-creating batch; it
+    is resolved once per stream start (offline ops are fenced out
+    while the stream runs).
 
-    Exactly-once by LAYOUT (the maintain_term_stats pattern): dynamic
-    partition overwrite means a replayed micro-batch overwrites ITS
-    OWN batch_id partitions and nothing else — and the revision
-    path's prior-state fold EXCLUDES the current batch id, so a
-    replay recomputes the identical correction. Each delta is sized
-    by the batch's matching postings, never the corpus — and lands in
-    at most min(batch vocabulary, n_buckets) directories, bounding
-    the small-file growth rate per batch."""
+    ``allow_revisions=False`` keeps the append-only-unique-doc_ids
+    contract (no read-side work per batch). ``allow_revisions=True``
+    lets a batch RE-EMIT doc_ids already committed: each gets a
+    tombstone at this batch id and the commit row becomes the store's
+    correction (the frequency store's totals delta). Exactly-once by
+    LAYOUT: a replayed micro-batch dynamic-overwrites its own batch_id
+    partitions, and every prior-state fold excludes the current id,
+    so a replay recomputes the identical batch. Micro-batch ids are
+    guarded against offline-claimed fence ids
+    (layout.guard_stream_batch)."""
     import os
-
-    from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.sources.layout import (
         POSTINGS_TOK_BUCKETS,
-        _corrected_totals,
-        _doclens_frame,
-        _hadoop_path,
-        _overlap_writes,
-        _posting_frames,
+        _apply_batch,
         _postings_meta_buckets,
-        _write_postings_meta,
         guard_stream_batch,
     )
 
-    postings_dir = os.path.join(out_dir, "postings")
-    totals_dir = os.path.join(out_dir, "totals")
-    # the bucket modulus is immutable for the store's lifetime and
-    # offline ops are fenced out while this stream runs — resolve it
-    # on the first batch and reuse (one fewer bounded collect per
-    # micro-batch; per-RUN state only, re-read on every stream start)
     nb_cache: list[int] = []
-
-    def _dyn(df: DataFrame, cols: list, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*cols)
-            .parquet(path)
-        )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.localCheckpoint()  # decouple from the stream
@@ -1288,16 +1260,16 @@ def maintain_posting_lists(
             return
         spark = batch.sparkSession
         # offline revise/delete fences its batch ids against exactly
-        # this write (sources/layout.guard_stream_batch): resuming an
-        # old checkpoint after an offline revision would reuse its id
-        # and clobber the revision's partitions — fail loudly instead
+        # this write: resuming an old checkpoint after an offline
+        # revision would reuse its id and clobber the revision's
+        # partitions — fail loudly instead
         guard_stream_batch(
             spark,
             os.path.join(out_dir, "offline_fence"),
             batch_id,
-            f"posting-list store at {out_dir}",
+            f"{spec.what} at {out_dir}",
         )
-        if not nb_cache:
+        if spec.bucketed and not nb_cache:
             nb_cache.append(
                 _postings_meta_buckets(
                     spark,
@@ -1309,60 +1281,15 @@ def maintain_posting_lists(
                     ),
                 )
             )
-        nb = nb_cache[0]
-        fs, dl_path = _hadoop_path(
-            spark, os.path.join(out_dir, "doclens")
+        _apply_batch(
+            spec,
+            spark,
+            out_dir,
+            batch,
+            batch_id,
+            nb_cache[0] if nb_cache else None,
+            allow_revisions,
         )
-        tf, totals = _posting_frames(batch, batch_id, nb)
-        if allow_revisions and fs.exists(dl_path):
-            # totals correction: subtract the replaced versions'
-            # contribution (replay-safe: the fold excludes THIS
-            # batch) — one lazy plan, no driver round-trips
-            # (layout._corrected_totals)
-            totals = _corrected_totals(
-                spark,
-                out_dir,
-                batch.select("doc_id").distinct(),
-                batch_id,
-                totals,
-            )
-        # postings/doclens/tombstones are independent non-commit
-        # deltas below the batch's commit point (totals, LAST) —
-        # overlap them (guide §2.6, layout._overlap_writes; the
-        # revise_posting_lists argument: readers only see tombstones
-        # below the committed high-water mark, and a replayed batch
-        # dynamic-overwrites its own partitions)
-        writes = [
-            lambda: _dyn(tf, ["batch_id", "tok_bucket"], postings_dir),
-            lambda: _dyn(
-                _doclens_frame(batch, batch_id),
-                ["batch_id"],
-                os.path.join(out_dir, "doclens"),
-            ),
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    ["batch_id"],
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        # meta is written ONCE, on the store-creating batch: the
-        # modulus never changes, and a per-batch delete+write of the
-        # one-row table opens a window where a concurrent
-        # bm25_from_postings serve reads 'has no meta table' or hits
-        # FileNotFound on listed-then-deleted files (ADVICE r10) —
-        # steady-state micro-batches leave the meta dir untouched
-        fs_m, meta_p = _hadoop_path(spark, os.path.join(out_dir, "meta"))
-        if not fs_m.exists(meta_p):
-            _write_postings_meta(spark, out_dir, nb)
-        # totals LAST — the batch's commit point, matching the batch
-        # revision path's crash-ordering contract
-        _dyn(totals.coalesce(1), ["batch_id"], totals_dir)
 
     return (
         docs_stream.writeStream.outputMode("append")
@@ -1370,6 +1297,34 @@ def maintain_posting_lists(
         .foreachBatch(upsert)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def maintain_posting_lists(
+    docs_stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    n_buckets: int | None = None,
+    allow_revisions: bool = False,
+):
+    """Incremental BM25 posting-list maintenance (maintain_delta_store
+    over the frequency store): each micro-batch appends its (term,
+    doc_id, tf, dl) rows under ``batch_id=N/tok_bucket=...``, a
+    doclens-ledger delta and the totals row read back from it — the
+    same frames and commit row as write_posting_lists, so
+    bm25_from_postings serves it unchanged and compact_posting_lists
+    folds it. ``allow_revisions=True`` is the streaming twin of
+    layout.revise_posting_lists (totals become a correction from the
+    O(n_docs) doclens ledger)."""
+    from se_data_pipeline_spark.sources.layout import _FREQUENCY
+
+    return maintain_delta_store(
+        _FREQUENCY,
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        n_buckets,
+        allow_revisions,
     )
 
 
@@ -1380,115 +1335,20 @@ def maintain_positional_postings(
     n_buckets: int | None = None,
     allow_revisions: bool = False,
 ):
-    """Incremental POSITIONAL posting-list maintenance — the
-    streaming twin of sources/layout.write_positional_postings /
-    revise_positional_postings, sharing their frame builder
-    (layout._positional_frames) so batch-built and stream-maintained
-    stores serve phrase/proximity/AND queries through the same
-    readers. Each micro-batch appends its (doc, term, positions)
-    rows under ``batch_id=N/tok_bucket=...`` plus the commit-ledger
-    row (written LAST — the batch's commit point); the bucket modulus
-    comes from the store's meta table when the store exists, else
-    from `n_buckets`, recorded on the store-creating batch only
-    (the maintain_posting_lists meta-write-once protocol).
+    """Incremental POSITIONAL posting-list maintenance
+    (maintain_delta_store over the positional store):
+    ``allow_revisions=True`` tombstones re-emitted doc_ids — a changed
+    document CHANGES ITS POSITIONS, which under append-only would
+    serve phantom/lost phrase hits."""
+    from se_data_pipeline_spark.sources.layout import _POSITIONAL
 
-    ``allow_revisions=False`` (default) keeps the append-only-unique-
-    doc_ids contract; ``allow_revisions=True`` tombstones every
-    re-emitted doc_id at this batch id so its stale position arrays
-    die for every reader — a changed document CHANGES ITS POSITIONS,
-    which under append-only would serve phantom/lost phrase hits.
-    Exactly-once by LAYOUT: a replayed micro-batch overwrites ITS OWN
-    partitions via dynamic partition overwrite; micro-batch ids are
-    guarded against offline-claimed fence ids
-    (layout.guard_stream_batch)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        POSTINGS_TOK_BUCKETS,
-        _hadoop_path,
-        _overlap_writes,
-        _positional_frames,
-        _postings_meta_buckets,
-        _write_postings_meta,
-        guard_stream_batch,
-    )
-
-    # modulus immutable mid-run (offline ops fenced while the stream
-    # runs): resolve once per stream start, reuse per batch
-    nb_cache: list[int] = []
-
-    def _dyn(df: DataFrame, cols: list, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*cols)
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"positional posting store at {out_dir}",
-        )
-        if not nb_cache:
-            nb_cache.append(
-                _postings_meta_buckets(
-                    spark,
-                    out_dir,
-                    default=(
-                        POSTINGS_TOK_BUCKETS
-                        if n_buckets is None
-                        else n_buckets
-                    ),
-                )
-            )
-        nb = nb_cache[0]
-        rows, batches = _positional_frames(batch, batch_id, nb)
-        # rows and tombstones are independent non-commit deltas below
-        # the batch's commit point (the ledger row, LAST) — overlap
-        # them (guide §2.6, layout._overlap_writes)
-        writes = [
-            lambda: _dyn(
-                rows,
-                ["batch_id", "tok_bucket"],
-                os.path.join(out_dir, "postings"),
-            )
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    ["batch_id"],
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        fs_m, meta_p = _hadoop_path(spark, os.path.join(out_dir, "meta"))
-        if not fs_m.exists(meta_p):
-            _write_postings_meta(spark, out_dir, nb)
-        # ledger row LAST — the batch's commit point
-        _dyn(
-            batches.coalesce(1),
-            ["batch_id"],
-            os.path.join(out_dir, "batches"),
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return maintain_delta_store(
+        _POSITIONAL,
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        n_buckets,
+        allow_revisions,
     )
 
 
@@ -1498,75 +1358,19 @@ def maintain_shingle_index(
     checkpoint_dir: str,
     allow_revisions: bool = False,
 ):
-    """Incremental shingle-index maintenance — the streaming twin of
-    sources/layout.write_shingle_index / revise_shingle_docs,
-    through the SAME frame builder (layout._shingle_frames): each
-    micro-batch of ingested documents appends its (doc_id, m, h)
-    rows under ``batch_id=N`` plus the commit-ledger row (written
-    LAST). This is the continuous-ingest dedup loop closed: a batch
-    is screened via near_dups_from_index, the survivors are ingested,
-    and THIS stream adds their shingles to the index so the next
-    batch screens against them too — the corpus text is never
-    re-shingled.
+    """Incremental shingle-index maintenance (maintain_delta_store over
+    the shingle index) — the continuous-ingest dedup loop closed: a
+    batch is screened via near_dups_from_index, the survivors are
+    ingested, and THIS stream adds their shingles to the index so the
+    next batch screens against them too."""
+    from se_data_pipeline_spark.sources.layout import _SHINGLE
 
-    ``allow_revisions=True`` tombstones re-emitted doc_ids at the
-    batch id (a changed document changes its shingle set AND its m).
-    Exactly-once by layout; micro-batch ids guarded against
-    offline-claimed fence ids."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        _overlap_writes,
-        _shingle_frames,
-        guard_stream_batch,
-    )
-
-    def _dyn(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"shingle index at {out_dir}",
-        )
-        rows, ledger = _shingle_frames(batch, batch_id)
-        # rows and tombstones overlap below the batch's commit point
-        # (the ledger row, LAST) — guide §2.6, layout._overlap_writes
-        writes = [
-            lambda: _dyn(rows, os.path.join(out_dir, "postings"))
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        # ledger row LAST — the batch's commit point
-        _dyn(ledger.coalesce(1), os.path.join(out_dir, "batches"))
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return maintain_delta_store(
+        _SHINGLE,
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        allow_revisions=allow_revisions,
     )
 
 
@@ -1576,70 +1380,16 @@ def maintain_minhash_index(
     checkpoint_dir: str,
     allow_revisions: bool = False,
 ):
-    """Incremental MinHash-band-index maintenance — the streaming
-    twin of sources/layout.write_minhash_index / revise_minhash_docs
-    through the SAME frame builder (layout._minhash_frames): each
-    micro-batch of ingested documents appends its 4 (band, sig) rows
-    per doc under ``batch_id=N`` plus the commit-ledger row (written
-    LAST). Store #6's maintainer is the shingle maintainer's shape
-    verbatim — the r12 shared-lifecycle helpers mean it carries no
-    protocol logic of its own. ``allow_revisions=True`` tombstones
-    re-emitted doc_ids at the batch id; micro-batch ids are guarded
-    against offline-claimed fence ids."""
-    import os
+    """Incremental MinHash-band-index maintenance
+    (maintain_delta_store over the band index)."""
+    from se_data_pipeline_spark.sources.layout import _MINHASH
 
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        _minhash_frames,
-        _overlap_writes,
-        guard_stream_batch,
-    )
-
-    def _dyn(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"minhash band index at {out_dir}",
-        )
-        rows, ledger = _minhash_frames(batch, batch_id)
-        # rows and tombstones overlap below the batch's commit point
-        # (the ledger row, LAST) — guide §2.6, layout._overlap_writes
-        writes = [
-            lambda: _dyn(rows, os.path.join(out_dir, "postings"))
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        # ledger row LAST — the batch's commit point
-        _dyn(ledger.coalesce(1), os.path.join(out_dir, "batches"))
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return maintain_delta_store(
+        _MINHASH,
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        allow_revisions=allow_revisions,
     )
 
 

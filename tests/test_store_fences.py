@@ -452,13 +452,13 @@ def test_offline_revision_refuses_stream_partials(spark, tmp_path):
     write_positional_postings(docs, out, n_buckets=8)
 
     # simulate the crashed stream micro-batch: rows at id 0, NO ledger
-    stray_rows, _ = _positional_frames(
+    stray_rows = _positional_frames(
         docs.filter("doc_id = 0").withColumn(
             "text", F.lit("alpha beta stray")
         ),
         0,
         8,
-    )
+    )["postings"]
     (
         stray_rows.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -487,7 +487,7 @@ def test_offline_revision_refuses_stream_partials(spark, tmp_path):
 
     # a crashed OFFLINE revision's partials are exempt: claim the id
     # first, leave partial rows, re-run with the same input
-    stray2, _ = _positional_frames(revised, 1, 8)
+    stray2 = _positional_frames(revised, 1, 8)["postings"]
     claim_offline_batch(spark, os.path.join(out, "offline_fence"), 1)
     (
         stray2.write.mode("overwrite")
@@ -561,45 +561,56 @@ def test_ivf_revision_refuses_stream_partials(spark, tmp_path):
         )
 
 
-def test_legacy_positional_store_serves_without_ledger(
-    spark, tmp_path
-):
-    """ADVICE r11 low: a positional store persisted before the
-    batches ledger existed must serve append-only (no commit-point
-    filter) instead of raising path-not-found — and an offline
-    revision on it falls back to the physical max id and writes the
-    store's first ledger row."""
+def test_ledgerless_positional_store_is_rejected(spark, tmp_path):
+    """A positional store with rows but no batches ledger has no
+    committed batch: serving, revising and compacting it raise an
+    error naming the remedy (restart the stream or rebuild) instead
+    of serving the uncommitted rows append-only."""
     import shutil
 
     from se_data_pipeline_spark.sources.layout import (
+        compact_positional_postings,
         phrase_from_postings,
         revise_positional_postings,
         write_positional_postings,
     )
 
     docs = _tiny_docs(spark)
-    out = str(tmp_path / "legacy_pos")
+    out = str(tmp_path / "ledgerless_pos")
     write_positional_postings(docs, out, n_buckets=8)
-    shutil.rmtree(os.path.join(out, "batches"))  # pre-ledger layout
+    shutil.rmtree(os.path.join(out, "batches"))
 
-    served = phrase_from_postings(
-        spark, out, ("alpha", "beta"), limit=10
-    )
-    assert served.count() == 6  # every doc has the bigram twice
+    for op in (
+        lambda: phrase_from_postings(spark, out, ("alpha", "beta")),
+        lambda: revise_positional_postings(spark, docs, out),
+        lambda: compact_positional_postings(spark, out),
+    ):
+        with pytest.raises(ValueError, match="no batches commit table"):
+            op()
+    assert not os.path.exists(os.path.join(out, "offline_fence"))
 
-    b = revise_positional_postings(
-        spark,
-        docs.filter("doc_id = 0").withColumn(
-            "text", F.lit("alpha beta only")
-        ),
-        out,
+
+def test_crashed_build_meta_and_partial_rows_is_rejected(
+    spark, tmp_path
+):
+    """ADVICE r13 medium: the positional build writes meta beside the
+    rows, so a crash can leave meta plus PARTIAL postings and no
+    ledger. That store must fail loudly, never serve the partial
+    rows."""
+    from se_data_pipeline_spark.sources.layout import (
+        _positional_frames,
+        _write_postings_meta,
+        phrase_from_postings,
     )
-    assert b == 0  # physical max is the -1 base -> first free id
-    assert os.path.isdir(os.path.join(out, "batches"))
-    served2 = {
-        r["doc_id"]: r["n_hits"]
-        for r in phrase_from_postings(
-            spark, out, ("alpha", "beta"), limit=10
-        ).collect()
-    }
-    assert served2[0] == 1 and served2[1] == 2
+
+    docs = _tiny_docs(spark)
+    out = str(tmp_path / "crashed_build")
+    _write_postings_meta(spark, out, 8)
+    (
+        _positional_frames(docs.filter("doc_id < 2"), -1, 8)["postings"]
+        .write.mode("overwrite")
+        .partitionBy("batch_id", "tok_bucket")
+        .parquet(os.path.join(out, "postings"))
+    )
+    with pytest.raises(ValueError, match="rebuild the store"):
+        phrase_from_postings(spark, out, ("alpha", "beta")).collect()
